@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.{CosineSimilarityExpr, IpFunctions, TextFunctions, UrlFunctions}
+import graft.functions.{CanonicalizeUrlExpr, CosineSimilarityExpr, HostOfExpr, IpFunctions,
+  TextFunctions, UrlFunctions}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions.udf
 
@@ -51,9 +52,17 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "cosine_similarity",
       exprs => CosineSimilarityExpr(exprs.head, exprs(1)), "scala_udf")
-    spark.udf.register("url_canonicalize", udf(UrlFunctions.canonicalizeUrl _))
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "url_canonicalize", { exprs =>
+        require(exprs.length == 1, "url_canonicalize(url) takes exactly 1 argument")
+        CanonicalizeUrlExpr(castTo(exprs.head, "string"))
+      }, "scala_udf")
     spark.udf.register("url_normalize", udf(UrlFunctions.normalizeUrl _))
-    spark.udf.register("url_host", udf(UrlFunctions.hostOf _))
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "url_host", { exprs =>
+        require(exprs.length == 1, "url_host(url) takes exactly 1 argument")
+        HostOfExpr(castTo(exprs.head, "string"))
+      }, "scala_udf")
     spark.udf.register("is_public_ip", udf(IpFunctions.isPublicIp _))
     spark.udf.register("sanitize_filename", udf(TextFunctions.sanitizeFilename _))
     spark.udf.register("to_inches", udf((s: String) =>

@@ -752,13 +752,16 @@ object Dedup {
     * evaluated as a pure slot-equality predicate over the SAME persisted
     * all-pairs frame — no bucket explode, no per-config join, no second
     * text pass. Ground truth = exact shingle-set Jaccard ≥ `tauPpm`
-    * (intersections via one shingle-keyed equi-join, left-joined so
-    * disjoint pairs count as Jaccard 0).
+    * (intersections via one shingle-keyed equi-join).
     *
     * Like the SimHash audit this is the TUNING operator, deliberately
     * quadratic in its input: run it on a hash-sampled slice; the
     * winning config parameterizes the production band-bucket path
     * ([[minhashLshPairs]]), which never generates all pairs.
+    *
+    * @param tauPpm Jaccard threshold in ppm for a truth pair; must be
+    *               positive, so every truth pair shares a shingle (the
+    *               truth side folds over shingle intersections only)
     */
   def minhashBandingAudit(docs: DataFrame, slots: Int = 12,
                           configs: Seq[(Int, Int)] = Seq((2, 6), (3, 4), (6, 2)),
@@ -768,6 +771,7 @@ object Dedup {
     configs.foreach { case (b, r) =>
       require(b > 0 && r > 0 && b * r == slots,
         s"bands x rowsPerBand must equal slots=$slots: $b x $r") }
+    require(tauPpm > 0, "tauPpm must be positive (jppm = 0 pairs are non-truth)")
     // ZERO-EXCHANGE signature construction: the shingle array is
     // per-doc DISTINCT (ShinglesExpr), so slot i = array_min over
     // md5_48("i:shingle") of the array — identical to the former
@@ -808,12 +812,11 @@ object Dedup {
     // |docs|-sized signature cache, and the quadratic frame never
     // crosses an exchange at all (guide §2.3: shuffle keys and
     // metadata, never the bulk stream).
-    require(tauPpm > 0, "tauPpm must be positive (jppm = 0 pairs are non-truth)")
+    val candCounts = configs.indices.map(ci =>
+      sum(when(col(s"cand$ci"), 1L).otherwise(0L)).as(s"nc$ci"))
     val candAgg = sigs.as("a").join(sigs.as("b"), col("a.id") < col("b.id"))
       .select(candCols: _*)
-      .agg(count(lit(1)).as("n_pairs"),
-        configs.indices.map(ci =>
-          sum(when(col(s"cand$ci"), 1L).otherwise(0L)).as(s"nc$ci")): _*)
+      .agg(candCounts.head, candCounts.tail: _*)
     val inter = elems.as("x").join(elems.as("y"),
         col("x.e") === col("y.e") && col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))

@@ -1,41 +1,74 @@
 package graft.datatools
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Distributed graph primitives the crawl + dedup pipelines need at
-  * 100 TB: connected components over near-dup pair sets (the
-  * "keep one document per duplicate cluster" endgame of every dedup
-  * family in [[Dedup]]) and bounded BFS over the link graph (frontier
-  * prioritization by seed distance — the crawl-scheduling counterpart
-  * of the reference enumerating linked sub-resources per route,
-  * `pkg/modules/chromium/chromium.go` link/asset discovery).
+/** The graph tier of the crawl and dedup pipelines: near-dup clusters
+  * ([[connectedComponents]]), frontier priority (seed distance,
+  * PageRank / TrustRank / host-level rank, HITS, budget apportionment),
+  * spam and community signals, and anchor text — all distributed
+  * DataFrame jobs, no driver-side graph, no collect.
   *
-  * Scale design: both are iterative DataFrame jobs whose per-iteration
-  * work is one or two key-partitioned shuffles — no driver-side graph,
-  * no collect. Components uses min-label propagation WITH pointer
-  * jumping (label(v) ← min over {label(v)} ∪ {label(u): u~v} ∪
-  * {label(label(v))}), the Hash-to-Min family of Rastogi et al.
-  * (ICDE'13) — pointer jumping contracts label chains so convergence is
-  * O(log diameter) rounds, not O(diameter); near-dup clusters are
-  * almost-cliques, so in practice 2-3 rounds. Every iteration's result
-  * is persisted and materialized (the change count is the loop guard),
-  * and the previous iteration is unpersisted — lineage stays one round
-  * deep, which is what lets the loop run at 10¹⁰ edges without stack
-  * or DAG blowup.
+  * Iteration discipline: each round's frame is eagerly
+  * localCheckpointed (the plan stays one round deep at any round count)
+  * and the checkpoint it superseded is released (an R-round run never
+  * pins R copies). CC, the rank family and LPA share one loop for this
+  * ([[checkpointedRounds]]); BFS keeps its two-frame level loop under
+  * the same rules. Loop guards ride as observed metrics on the
+  * checkpoint job and are read through [[observedCount]].
   *
-  * Determinism: the fixpoint is unique (every node labeled with its
-  * component's minimum id), so the answer is independent of iteration
-  * count, partitioning, and scheduling — oracle-safe.
+  * Determinism: CC's fixpoint is unique; the rank family, HITS and LPA
+  * run fixed round counts in integer arithmetic with deterministic
+  * tie-breaks — answers are independent of partitioning and scheduling,
+  * and oracle-replayable.
   */
 object GraphOps {
+
+  /** The round loop of CC, the rank family and LPA. `round(state, i)`
+    * gives round i's frame, which is eagerly checkpointed, and its guard,
+    * which reads that checkpoint and says whether another round follows.
+    * Then the superseded checkpoint is released (only ones made here,
+    * never `init`) and `onRound(i)` runs. Returns the last checkpoint.
+    */
+  private def checkpointedRounds(init: DataFrame, onRound: Int => Unit)(
+      round: (DataFrame, Int) => (DataFrame, DataFrame => Boolean)): DataFrame = {
+    var state = init
+    var i = 0
+    var more = true
+    while (more) {
+      i += 1
+      val (plan, guard) = round(state, i)
+      val next = plan.localCheckpoint(true)
+      more = guard(next)
+      if (state ne init) Checkpoints.release(state)
+      state = next
+      onRound(i)
+    }
+    state
+  }
+
+  /** A loop guard's observed count: free when the metric is present.
+    * AQE drops the metric when it prunes an empty subtree; then `rows`,
+    * the guard's rows of the round's checkpoint, are counted exactly.
+    */
+  private[graft] def observedCount(obs: Observation, metric: String, rows: DataFrame): Long =
+    obs.get.get(metric).flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(rows.count())
+
+  /** Distinct endpoints of an (src, dst) edge frame, as (id). */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).unionByName(e.select(col("dst").as("id"))).distinct()
 
   /** (id, cluster_id) for every node appearing in `pairs`;
     * cluster_id = the component's minimum node id. Ids may be any
     * orderable type (long doc ids here; string ids work — Spark and
     * DuckDB agree on binary collation for min).
+    *
+    * Min-label propagation with pointer jumping (label(v) ← min of
+    * label(v), label(u) for u~v, and label(label(v))), the Hash-to-Min
+    * family of Rastogi et al. (ICDE'13): O(log diameter) rounds, 2-3 on
+    * near-dup clusters. The changed-label count is the loop guard.
     *
     * @param pairs one row per undirected edge; self-loops and
     *              duplicate/reversed edges are tolerated (normalized
@@ -47,7 +80,6 @@ object GraphOps {
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
                           maxIter: Int = 50, onRound: Int => Unit = _ => ()): DataFrame = {
-    val spark = pairs.sparkSession
     // symmetric edge list (u ~ v both ways), self-loops dropped — the
     // one shuffle key the whole loop re-uses is `v` (the join side)
     val sym = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
@@ -67,15 +99,15 @@ object GraphOps {
     // cand, jump), so concurrent stages contend on the lazily
     // materializing seed shuffle; the single-reference loops keep the
     // fold, this one pays the init job for a deterministic round 1.
-    var labels = edges.select(col("u").as("id")).distinct()
+    val init = edges.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
       .localCheckpoint(true)
-    var iter = 0
-    var changed = 1L
-    while (changed > 0) {
-      iter += 1
-      require(iter <= maxIter,
-        s"connectedComponents did not converge in $maxIter iterations")
+    val releaseInit = (i: Int) => {
+      if (i == 1) Checkpoints.release(init) // round 1 superseded it
+      onRound(i)
+    }
+    val labels = checkpointedRounds(init, releaseInit) { (state, i) =>
+      val labels = state.select("id", "lbl")
       // 1. neighbor propagation: the best label among my neighbors
       val nbrMin = edges.join(labels, edges("v") === labels("id"))
         .groupBy(col("u")).agg(min(col("lbl")).as("nmin"))
@@ -90,24 +122,17 @@ object GraphOps {
       // both the labels AND the changed-count — one job per round, not
       // a checkpoint job plus a count job (guide §1.2: fewer passes;
       // measured ~0.1 s/round of pure scheduling at sf0.1)
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val next = cand.join(jump, cand("lbl1") === jump("jid"), "left")
         .select(col("id"), least(col("lbl1"), coalesce(col("jlbl"), col("lbl1"))).as("lbl"),
           col("old"))
         .observe(obs, sum(when(col("lbl") =!= col("old"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint(true) // eager: next is materialized here
-      // a missing/empty metric map only occurs when the observed frame
-      // itself is empty (AQE prunes the CollectMetrics node with the
-      // empty subtree) — and an empty label frame has zero changes, so
-      // 0 is the exact answer, not a fallback approximation
-      changed = obs.get.get("changed").flatMap(Option(_))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      // next's lineage is truncated, so the previous round's checkpoint
-      // blocks are dead — release them or an R-round run pins R copies
-      // of the node set
-      Checkpoints.release(labels)
-      labels = next.select("id", "lbl")
-      onRound(iter)
+      (next, (ckpt: DataFrame) => {
+        val changed = observedCount(obs, "changed", ckpt.filter(col("lbl") =!= col("old")))
+        require(changed == 0L || i < maxIter,
+          s"connectedComponents did not converge in $maxIter iterations")
+        changed > 0L
+      })
     }
     edges.unpersist()
     labels.select(col("id"), col("lbl").as("cluster_id"))
@@ -124,6 +149,36 @@ object GraphOps {
     val sizes = comp.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
     comp.join(sizes, Seq("cluster_id"))
       .select(col("id"), col("cluster_id"), col("cluster_size"))
+  }
+
+  /** The fixed-point rank round of [[linkAuthority]],
+    * [[weightedAuthority]] and [[trustRank]], `iters` times from
+    * rank₀(v) = `rank0`: rank'(v) = teleport(v) + (d · Σ_{u→v} share) div 100.
+    *
+    * @param edges (src, dst, …) that `share` reads beside the source's
+    *              `rank`; persisted by the caller, unpersisted here
+    * @param nodes (id, …) that `rank0` and `teleport` read; lazily
+    *              checkpointed by the caller, so it materializes inside
+    *              round 1's job (rank₀ is a projection of it); released here
+    * @return (id, rank)
+    */
+  private def fixedPointRank(edges: DataFrame, nodes: DataFrame, share: Column,
+                             rank0: Column, teleport: Column, iters: Int,
+                             dampingPct: Int, onRound: Int => Unit): DataFrame = {
+    val rank0Frame = nodes.select(col("id"), rank0.as("rank"))
+    val ranks = checkpointedRounds(rank0Frame, onRound) { (ranks, i) =>
+      val contrib = edges.join(ranks, edges("src") === ranks("id"))
+        .select(col("dst"), share.as("share"))
+        .groupBy(col("dst")).agg(sum(col("share")).as("m"))
+      val next = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+        .select(col("id"),
+          (teleport + expr(s"(bigint($dampingPct) * coalesce(m, bigint(0))) DIV 100"))
+            .as("rank"))
+      (next, (_: DataFrame) => i < iters)
+    }
+    edges.unpersist()
+    Checkpoints.release(nodes) // the final ranks are checkpointed; nodes is dead
+    ranks
   }
 
   /** Link-authority scores over a directed graph: PageRank with a
@@ -160,34 +215,12 @@ object GraphOps {
                     onRound: Int => Unit = _ => ()): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // LAZY: the node set materializes inside round 1's checkpoint job
-    // (the rank₀ fold), later rounds read its cache
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(false)
+    val nodes = endpoints(e).localCheckpoint(false)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val eDeg = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
     val base = scale * (100 - dampingPct) / 100
-    // rank₀ is a pure projection over the checkpointed node set — it
-    // folds into round 1's job instead of paying its own checkpoint job
-    var ranks = nodes.select(col("id"), lit(scale).as("rank"))
-    var prevCkpt: DataFrame = null
-    (1 to iters).foreach { i =>
-      val contrib = eDeg.join(ranks, eDeg("src") === ranks("id"))
-        .select(col("dst"), expr("rank DIV outdeg").as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("m"))
-      ranks = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (lit(base) + expr(s"(bigint($dampingPct) * coalesce(m, bigint(0))) DIV 100"))
-            .as("rank"))
-      ranks = ranks.localCheckpoint(true)
-      if (prevCkpt != null) Checkpoints.release(prevCkpt) // superseded round
-      prevCkpt = ranks
-      onRound(i) // ranks materialized above — the IterSoak timing seam
-    }
-    eDeg.unpersist()
-    Checkpoints.release(nodes) // final ranks is checkpointed; nodes is dead
-    ranks
+    fixedPointRank(eDeg, nodes, expr("rank DIV outdeg"), lit(scale), lit(base),
+      iters, dampingPct, onRound)
   }
 
   /** WEIGHTED authority over a COARSENED graph — the host-level (or
@@ -214,31 +247,12 @@ object GraphOps {
     val we = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-    val nodes = we.select(col("src").as("id"))
-      .unionByName(we.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(false) // lazy: materializes in round 1's job
+    val nodes = endpoints(we).localCheckpoint(false)
     val outw = we.groupBy(col("src")).agg(sum(col("w")).as("outw"))
     val eW = we.join(outw, "src").persist(StorageLevel.MEMORY_AND_DISK)
     val base = scale * (100 - dampingPct) / 100
-    // rank₀ lazy + optional lazy final round — the [[linkAuthority]]
-    // job-count discipline
-    var ranks = nodes.select(col("id"), lit(scale).as("rank"))
-    var prevCkpt: DataFrame = null
-    (1 to iters).foreach { i =>
-      val contrib = eW.join(ranks, eW("src") === ranks("id"))
-        .select(col("dst"), expr("(rank * w) DIV outw").as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("m"))
-      ranks = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (lit(base) + expr(s"(bigint($dampingPct) * coalesce(m, bigint(0))) DIV 100"))
-            .as("rank"))
-      ranks = ranks.localCheckpoint(true)
-      if (prevCkpt != null) Checkpoints.release(prevCkpt)
-      prevCkpt = ranks
-    }
-    eW.unpersist()
-    Checkpoints.release(nodes)
-    ranks
+    fixedPointRank(eW, nodes, expr("(rank * w) DIV outw"), lit(scale), lit(base),
+      iters, dampingPct, _ => ())
   }
 
   /** Largest-remainder (Hamilton) apportionment of an integer crawl
@@ -312,35 +326,17 @@ object GraphOps {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val s = seeds.select(col(seedCol).as("id")).distinct()
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
+    val nodes = endpoints(e)
       .join(s.withColumn("is_seed", lit(true)), Seq("id"), "left")
       .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .localCheckpoint(false) // lazy: materializes in round 1's job
+      .localCheckpoint(false)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val eDeg = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
     val base = scale * (100 - dampingPct) / 100
-    // rank₀ lazy + optional lazy final round — the [[linkAuthority]]
-    // job-count discipline
-    var ranks = nodes
-      .select(col("id"), when(col("is_seed"), scale).otherwise(0L).as("rank"))
-    var prevCkpt: DataFrame = null
-    (1 to iters).foreach { i =>
-      val contrib = eDeg.join(ranks, eDeg("src") === ranks("id"))
-        .select(col("dst"), expr("rank DIV outdeg").as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("m"))
-      ranks = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (when(col("is_seed"), base).otherwise(0L) +
-            expr(s"(bigint($dampingPct) * coalesce(m, bigint(0))) DIV 100"))
-            .as("rank"))
-      ranks = ranks.localCheckpoint(true)
-      if (prevCkpt != null) Checkpoints.release(prevCkpt)
-      prevCkpt = ranks
-    }
-    eDeg.unpersist()
-    Checkpoints.release(nodes)
-    ranks.select(col("id"), col("rank").as("trust"))
+    fixedPointRank(eDeg, nodes, expr("rank DIV outdeg"),
+      when(col("is_seed"), scale).otherwise(0L), when(col("is_seed"), base).otherwise(0L),
+      iters, dampingPct, _ => ())
+      .select(col("id"), col("rank").as("trust"))
   }
 
   /** Minimum seed-distance (bounded BFS) over a directed link graph:
@@ -369,16 +365,14 @@ object GraphOps {
     var d = 0
     while (d < maxDepth) {
       d += 1
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val next = frontier.join(edges, frontier("id") === edges(srcCol))
         .select(col(dstCol).as("id")).distinct()
         .join(visited, Seq("id"), "left_anti") // left-anti ⇒ depth = MIN distance
         .select(col("id"), lit(d).as("depth"))
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint(true)
-      // empty metric map ⇔ empty frontier (AQE prunes CollectMetrics
-      // with the empty subtree) — 0 is then the exact count
-      val n = obs.get.get("n").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val n = observedCount(obs, "n", next)
       // the previous level's frontier checkpoint is superseded (its
       // rows live on in `visited`); at d = 1 frontier IS visited — keep
       if (frontier ne visited) Checkpoints.release(frontier)
@@ -677,14 +671,9 @@ object GraphOps {
         .select(col("dst").as("a"), col("src").as("b")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(false) // lazy: materializes in round 1's job
-    // label₀ lazy + optional lazy final round — the [[linkAuthority]]
-    // job-count discipline
-    var labels = nodes.select(col("id"), col("id").as("label"))
-    var prevCkpt: DataFrame = null
-    (1 to iters).foreach { i =>
+    val nodes = endpoints(e).localCheckpoint(false) // lazy: materializes in round 1's job
+    val label0 = nodes.select(col("id"), col("id").as("label"))
+    val labels = checkpointedRounds(label0, _ => ()) { (labels, i) =>
       val counted = nbrs.join(labels, nbrs("b") === labels("id"))
         .groupBy(col("a"), col("label")).agg(count(lit(1)).as("cnt"))
       // argmax by (cnt desc, label asc) as a struct-min partial agg —
@@ -692,11 +681,9 @@ object GraphOps {
       val won = counted.groupBy(col("a"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
           .getField("l").as("new_label"))
-      labels = nodes.join(won, nodes("id") === won("a"), "left")
+      val next = nodes.join(won, nodes("id") === won("a"), "left")
         .select(col("id"), coalesce(col("new_label"), col("id")).as("label"))
-      labels = labels.localCheckpoint(true)
-      if (prevCkpt != null) Checkpoints.release(prevCkpt)
-      prevCkpt = labels
+      (next, (_: DataFrame) => i < iters)
     }
     nbrs.unpersist()
     Checkpoints.release(nodes)

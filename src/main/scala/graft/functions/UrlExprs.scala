@@ -7,20 +7,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen expressions for the crawl hot path's URL scalars.
+/** Native codegen expressions for the crawl hot path's URL scalars,
+  * and the only Column/SQL form of URL canonicalization (SQL names
+  * `url_canonicalize`, `url_host` via [[graft.GraftFunctions.register]]).
   *
-  * Three candidate implementations were measured at bench scale
-  * (~4M URL rows/round):
-  *   - Scala UDF over [[UrlFunctions.canonicalizeUrl]] — fast parser,
-  *     but pays the serde + lambda boundary per row and blocks
-  *     whole-stage codegen;
-  *   - built-in regex Column stack ([[UrlFunctions.canonicalizeUrlCol]])
-  *     — codegen'd but evaluates 6 regex automata per row (kept for the
-  *     DuckDB-oracle-expressible queries);
-  *   - THIS: a unary expression whose generated code calls the static
-  *     hand-rolled parser directly — single pass per row, no serde, no
-  *     regex, stays inside the WholeStageCodegen stage.
-  * UrlExprParitySpec pins all three to identical outputs.
+  * The generated code calls the static hand-rolled parser in
+  * [[UrlFunctions]] directly — single pass per row, no serde, no regex,
+  * inside the WholeStageCodegen stage. Measured at bench scale (~4M URL
+  * rows/round), it beat a Scala UDF over the same parser (serde + lambda
+  * boundary per row, blocks whole-stage codegen) and a built-in regex
+  * Column stack (6 regex automata per row). UrlExprParitySpec pins both
+  * expressions to the Scala functions.
   */
 case class CanonicalizeUrlExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType

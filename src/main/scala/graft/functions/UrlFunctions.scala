@@ -20,11 +20,12 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * the trailing slash, so the FIXTURES.md `seen-dup` cases (case, default
   * port, trailing slash) canonicalize equal.
   *
-  * Everything here exists twice on purpose: a pure Scala function (used
-  * by the straight-line crawl reference model in tests and by typed
-  * Dataset operators) and a Column expression built from built-ins
-  * (codegen'd, usable in oracle-checked queries). Both must agree — there
-  * is a ScalaCheck spec pinning that.
+  * Most scalars here exist twice: a pure Scala function (used by the
+  * straight-line crawl reference model in tests and by typed Dataset
+  * operators) and a Column expression built from built-ins (codegen'd,
+  * usable in oracle-checked queries); ColumnParitySpec pins each pair
+  * equal. [[canonicalizeUrl]] and [[hostOf]] also back the native
+  * expressions in [[UrlExprs]], which call them directly.
   */
 object UrlFunctions {
 
@@ -81,35 +82,6 @@ object UrlFunctions {
       val hp = if (port >= 0) s"${p.host}:$port" else p.host
       s"${p.scheme}://$hp$path${p.query}"
     case None => raw.trim
-  }
-
-  /** Column twin of [[canonicalizeUrl]] — built-ins only so it stays in
-    * whole-stage codegen and is expressible in the DuckDB oracle.
-    * Assumes scheme://host/path shape (no userinfo/v6 — crawl tables);
-    * anything without `scheme://` passes through trimmed, matching the
-    * Scala twin's None branch.
-    */
-  def canonicalizeUrlCol(url: Column): Column = {
-    val trimmed = trim(url)
-    when(!trimmed.rlike("^[A-Za-z][A-Za-z0-9+.-]*://"), trimmed)
-      .otherwise(canonicalizeUrlColUnsafe(trimmed))
-  }
-
-  private def canonicalizeUrlColUnsafe(trimmed: Column): Column = {
-    val scheme = lower(regexp_extract(trimmed, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val hostPort = lower(regexp_extract(trimmed, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1))
-    val port = regexp_extract(hostPort, ":(\\d+)$", 1)
-    val keepPort = when(port === "", lit(""))
-      .when(scheme === "http" && port === "80", lit(""))
-      .when(scheme === "https" && port === "443", lit(""))
-      .otherwise(concat(lit(":"), port))
-    val bareHost = regexp_replace(hostPort, ":\\d+$", "")
-    val pathQ = regexp_extract(trimmed, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)", 1)
-    val path = regexp_extract(pathQ, "^([^?]*)", 1)
-    val query = regexp_extract(pathQ, "(\\?.*)$", 1)
-    val pathNorm = when(path === "", lit("/"))
-      .otherwise(regexp_replace(path, "(.)/$", "$1"))
-    concat(scheme, lit("://"), bareHost, keepPort, pathNorm, query)
   }
 
   /** Hostname extraction (`events.go:299-305`): lowercase host, no port. */

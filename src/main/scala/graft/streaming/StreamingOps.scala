@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.UrlFunctions
+import graft.functions.{UrlExprs, UrlFunctions}
 import graft.model.CrawlConfig
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,7 +46,7 @@ object StreamingOps {
   ): Dataset[AdmissionResult] = {
     import spark.implicits._
     urls
-      .withColumn("url_canon", udf(UrlFunctions.canonicalizeUrl _).apply(col("url")))
+      .withColumn("url_canon", UrlExprs.canonicalize(col("url")))
       .withColumn("host", UrlFunctions.hostOfCol(col("url_canon")))
       .as[(String, Double, Long, java.sql.Timestamp, String, String)]
       .groupByKey(_._6)

@@ -20,17 +20,6 @@ class ColumnParitySpec extends SparkSpec {
     } yield s"$s://$h$p$path"
   }
 
-  test("canonicalizeUrlCol matches canonicalizeUrl on the URL corpus") {
-    import spark.implicits._
-    val df = urlCorpus.toDF("url")
-      .withColumn("col_canon", UrlFunctions.canonicalizeUrlCol(col("url")))
-    val scalaUdf = udf(UrlFunctions.canonicalizeUrl _)
-    val diff = df.withColumn("scala_canon", scalaUdf(col("url")))
-      .filter(col("col_canon") =!= col("scala_canon"))
-      .select("url", "col_canon", "scala_canon").collect()
-    assert(diff.isEmpty, diff.map(_.toString).mkString("\n"))
-  }
-
   test("hostOfCol matches hostOf") {
     import spark.implicits._
     val scalaUdf = udf(UrlFunctions.hostOf _)

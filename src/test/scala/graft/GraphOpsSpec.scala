@@ -1,7 +1,10 @@
 package graft
 
 import graft.datatools.{Dedup, GraphOps}
+import org.apache.spark.sql.{Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.scalacheck.Gen
 
 class GraphOpsSpec extends SparkSpec {
@@ -338,6 +341,36 @@ class GraphOpsSpec extends SparkSpec {
     val b4 = live()
     GraphOps.hits(chain.toDF("src", "dst"), iters = 4).collect()
     assert(live() - b4 <= 1, "hits leaked checkpoints")
+    val b5 = live()
+    GraphOps.weightedAuthority(chain.toDF("src", "dst"), iters = 4).collect()
+    assert(live() - b5 <= 1, "weightedAuthority leaked checkpoints")
+    val b6 = live()
+    GraphOps.trustRank(chain.toDF("src", "dst"), Seq(1L).toDF("id"), iters = 4).collect()
+    assert(live() - b6 <= 1, "trustRank leaked checkpoints")
+    val b7 = live()
+    GraphOps.labelPropagation(chain.toDF("src", "dst"), iters = 4).collect()
+    assert(live() - b7 <= 1, "labelPropagation leaked checkpoints")
+  }
+
+  test("loop guard counts the checkpointed rows exactly when the observed metric is absent") {
+    // completes an observation as a query would; the method is public in
+    // bytecode but package-private to Scala callers
+    def complete(obs: Observation, metrics: Row): Unit =
+      classOf[Observation].getMethod("setMetricsAndNotify", classOf[Row]).invoke(obs, metrics)
+    // the state AQE leaves when it prunes the CollectMetrics node: the
+    // observation completes with no metric at all
+    val absent = Observation()
+    complete(absent, new GenericRowWithSchema(Array.empty[Any], new StructType()))
+    assert(absent.get.isEmpty)
+    val ckpt = Seq((1L, 1L, 2L), (2L, 1L, 1L), (3L, 3L, 3L), (4L, 1L, 4L))
+      .toDF("id", "lbl", "old").localCheckpoint(true)
+    // CC's guard rows (changed labels) and BFS's (the whole level)
+    assert(GraphOps.observedCount(absent, "changed", ckpt.filter(col("lbl") =!= col("old"))) === 2L)
+    assert(GraphOps.observedCount(absent, "n", ckpt) === 4L)
+    // a present metric is read as observed, without counting
+    val present = Observation()
+    complete(present, new GenericRowWithSchema(Array[Any](7L), new StructType().add("n", LongType)))
+    assert(GraphOps.observedCount(present, "n", ckpt) === 7L)
   }
 
   // ---- anchorTopK ----

@@ -18,7 +18,8 @@ class SqlSurfaceSpec extends SparkSpec {
         |  is_public_ip('8.8.8.8') AS pub,
         |  sanitize_filename('/tmp/evil.pdf') AS name,
         |  to_inches('72pt') AS inches,
-        |  normalize_domain('*.Example.COM') AS dom
+        |  normalize_domain('*.Example.COM') AS dom,
+        |  url_canonicalize(CAST(NULL AS STRING)) AS canon_null
         |""".stripMargin).collect()(0)
     assert(row.getDouble(0) === 1.0)
     assert(row.getString(1) === "https://host.x/a")
@@ -27,6 +28,7 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(row.getString(5) === "evil.pdf")
     assert(row.getDouble(6) === 1.0)
     assert(row.getString(7) === "example.com")
+    assert(row.isNullAt(8))
   }
 
   test("cosine_similarity via registry is the native expression (codegen plan)") {
