@@ -1,9 +1,12 @@
 package graft.frontier
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
+
+import scala.collection.mutable
 
 /** URL-seen dedup layer (north rule): broadcast bloom → partitioned
   * cuckoo filters → exact left-anti join. The reference has no seen set
@@ -160,11 +163,14 @@ object UrlSeen {
   // Cuckoo layer — persisted (bucket, filter_bytes) state, delta updates.
   // ---------------------------------------------------------------------
 
+  /** Schema of the persisted cuckoo state: one blob per bucket. */
+  private val CuckooStateSchema = StructType(Seq(
+    StructField("bucket", IntegerType, nullable = false),
+    StructField("filter_bytes", BinaryType)))
+
   /** Empty cuckoo state (cold start). */
-  def emptyCuckooState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Array[Byte])].toDF("bucket", "filter_bytes")
-  }
+  def emptyCuckooState(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), CuckooStateSchema)
 
   /** Fold a round's delta (`url_hash` column) into the cuckoo state.
     * Cogroup on the bucket key: each task loads at most one blob,
@@ -194,7 +200,6 @@ object UrlSeen {
       blobDir: Option[String] = None,
       bloomShards: Option[BloomShardSpec] = None
   ): DataFrame = {
-    import spark.implicits._
     require(bloomShards.isEmpty || blobDir.isDefined,
       "sharded blooms need a blobDir to live in")
     // the session's hadoop conf (spark.hadoop.* — s3a creds, endpoints)
@@ -202,44 +207,60 @@ object UrlSeen {
     // would silently drop them
     val hconf = blobDir.map(_ =>
       new org.apache.spark.sql.SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-    val deltaKeyed = delta.select(col("url_hash").cast("long")).as[Long]
-      .groupByKey(cuckooBucket(_, buckets))
-    val prevKeyed = prev.select(col("bucket").cast("int"), col("filter_bytes"))
-      .as[(Int, Array[Byte])].groupByKey(_._1)
-    deltaKeyed.cogroup(prevKeyed) { (bucket, newKeys, prevRows) =>
-      val prevBytes = prevRows.toSeq.headOption.map(_._2)
-      val keys = newKeys.toArray
-      java.util.Arrays.sort(keys) // deterministic filter bytes per delta set
-      val bytes =
-        if (keys.isEmpty && prevBytes.isDefined)
-          prevBytes.get // untouched bucket: bytes pass through
-        else {
-          val cf = prevBytes.map(CuckooFilter.fromBytes)
-            .getOrElse(CuckooFilter.create(math.max(1024L, perBucketCapacity)))
-          keys.foreach(cf.insert) // insert failure self-saturates
-          cf.toBytes
-        }
-      // fused blob write: the SAME pass that computes the bucket's bytes
-      // writes its blob file (idempotent: deterministic bytes + tmp +
-      // rename), so the cuckoo layer costs ONE job per round instead of
-      // a persist + parquet write + foreachPartition triple
-      blobDir.foreach(dir => writeBlobFile(dir, bucket, bytes, hconf.get.value))
-      // sharded bloom rides the same pass: fold the delta into the
-      // bucket's previous shard (read from the previous round's dir)
-      // and write the updated shard beside the cuckoo blob
-      bloomShards.foreach { spec =>
-        val conf = hconf.get.value
-        val bf = spec.prevDir
-          .flatMap(d => readBloomFile(s"$d/bloom-$bucket.bin", conf))
-          .getOrElse(org.apache.spark.util.sketch.BloomFilter.create(
-            math.max(1024L, spec.capacityPerShard), spec.fpp))
-        keys.foreach(bf.putLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        writeBlobFileNamed(blobDir.get, s"bloom-$bucket.bin", bos.toByteArray, conf)
+    // an RDD cogroup of per-bucket key batches: a typed
+    // groupByKey/cogroup plans about ten generated classes (key and
+    // value (de)serializers, appended keys, sort orderings), enough to
+    // push a crawl round's steady class set out of Spark's 100-entry
+    // codegen cache. Each map task ships one long[] per
+    // bucket it saw, not one record per key; the reduce side sorts.
+    val deltaBatches = delta.select(col("url_hash").cast("long")).rdd.mapPartitions { rows =>
+      val byBucket = mutable.HashMap.empty[Int, mutable.ArrayBuilder.ofLong]
+      rows.foreach { r =>
+        val h = r.getLong(0)
+        byBucket.getOrElseUpdate(cuckooBucket(h, buckets), new mutable.ArrayBuilder.ofLong) += h
       }
-      Iterator.single((bucket, bytes))
-    }.toDF("bucket", "filter_bytes")
+      byBucket.iterator.map { case (b, ks) => (b, ks.result()) }
+    }
+    val prevBlobs = prev.select(col("bucket").cast("int"), col("filter_bytes")).rdd
+      .map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
+    val updated = deltaBatches.cogroup(prevBlobs, spark.sessionState.conf.numShufflePartitions)
+      .map { case (bucket, (batches, prevRows)) =>
+        val prevBytes = prevRows.headOption
+        val all = new mutable.ArrayBuilder.ofLong
+        batches.foreach(all ++= _)
+        val keys = all.result()
+        java.util.Arrays.sort(keys) // deterministic filter bytes per delta set
+        val bytes =
+          if (keys.isEmpty && prevBytes.isDefined)
+            prevBytes.get // untouched bucket: bytes pass through
+          else {
+            val cf = prevBytes.map(CuckooFilter.fromBytes)
+              .getOrElse(CuckooFilter.create(math.max(1024L, perBucketCapacity)))
+            keys.foreach(cf.insert) // insert failure self-saturates
+            cf.toBytes
+          }
+        // fused blob write: the SAME pass that computes the bucket's bytes
+        // writes its blob file (idempotent: deterministic bytes + tmp +
+        // rename), so the cuckoo layer costs ONE job per round instead of
+        // a persist + parquet write + foreachPartition triple
+        blobDir.foreach(dir => writeBlobFile(dir, bucket, bytes, hconf.get.value))
+        // sharded bloom rides the same pass: fold the delta into the
+        // bucket's previous shard (read from the previous round's dir)
+        // and write the updated shard beside the cuckoo blob
+        bloomShards.foreach { spec =>
+          val conf = hconf.get.value
+          val bf = spec.prevDir
+            .flatMap(d => readBloomFile(s"$d/bloom-$bucket.bin", conf))
+            .getOrElse(org.apache.spark.util.sketch.BloomFilter.create(
+              math.max(1024L, spec.capacityPerShard), spec.fpp))
+          keys.foreach(bf.putLong)
+          val bos = new java.io.ByteArrayOutputStream()
+          bf.writeTo(bos)
+          writeBlobFileNamed(blobDir.get, s"bloom-$bucket.bin", bos.toByteArray, conf)
+        }
+        Row(bucket, bytes)
+      }
+    spark.createDataFrame(updated, CuckooStateSchema)
   }
 
   /** One raw blob file per bucket — the Iceberg-puffin-style sketch

@@ -2,13 +2,16 @@ package graft.pipeline
 
 import graft.datatools.Dedup
 import graft.frontier.{Politeness, RobotsFilter, UrlSeen}
-import graft.functions.UrlFunctions
+import graft.functions.{BoundIntExpr, UrlFunctions}
 import graft.model._
 import graft.operators.SpanOps
 import graft.sources.{SnapshotStore, SyntheticWeb}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
+
+import scala.jdk.CollectionConverters._
 
 /** The crawl archetype end-to-end (SURVEY.md §3.1 re-expressed):
   *
@@ -33,9 +36,19 @@ import org.apache.spark.sql.functions._
   *     north star mandates a broadcast bloom); cuckoo blobs live in a
   *     persisted bucket table updated executor-side with the round's
   *     delta — sketch bytes never funnel through the driver.
-  *   - Counters ride on three single-pass aggregations (robots verdict,
-  *     admission flag, fetch stats) — no repeated count() jobs, no
-  *     recomputation of unpersisted lineage.
+  *   - Counters ride the passes that already run: the robots verdict
+  *     is observed on the frontier write, admission and fetch stats
+  *     fold inside their partitions (the fetch partition holds exactly
+  *     one `partition_id`, so the `metrics` rows need no aggregation
+  *     job), and the seen delta is counted by its own write — no
+  *     repeated count() jobs, no recomputation of unpersisted lineage.
+  *   - No per-round constant goes into generated code: the round number
+  *     is a bound reference ([[graft.functions.BoundIntExpr]]), not an
+  *     inlined literal, so a steady round re-uses every class the
+  *     previous round compiled and stays inside Spark's codegen cache.
+  *   - Resume and the post-commit reload start no Spark job: tables are
+  *     read with the schema their write recorded, and the seen total
+  *     comes from the manifest, not from a count of the seen union.
   */
 object CrawlJob {
 
@@ -54,6 +67,242 @@ object CrawlJob {
       outlinks: Long, seenTotal: Long)
 
   final case class CrawlSummary(rounds: Seq[RoundStats], seenTotal: Long, wallMs: Long)
+
+  /** One fetch partition's row of the `metrics` table (FIXTURES.md),
+    * folded inside that partition. `outlinks_total` feeds RoundStats
+    * and is not written.
+    */
+  final case class PartitionMetrics(
+      partition_id: Int, round: Int, urls_fetched: Long, urls_converted: Long,
+      bytes_total: Long, failed_count: Long, unique_origins: Long,
+      heaviest_url: String, heaviest_bytes: Long, redirects_total: Long,
+      outlinks_total: Long)
+
+  /** Running fold of [[PartitionMetrics]] over a partition's fetched
+    * rows. Origins are counted exactly; the heaviest URL breaks byte
+    * ties to the lexicographically first URL (NetAggregate's rule), so
+    * the row does not depend on the order rows arrive in.
+    */
+  private final class MetricsFold(pid: Int, round: Int) {
+    var fetched, converted, bytes, failed, heaviestBytes, redirects, outlinks = 0L
+    var heaviestUrl: String = null
+    val origins = scala.collection.mutable.HashSet.empty[String]
+
+    def add(r: FetchedRow): Unit = {
+      fetched += 1
+      if (r.error.isEmpty && r.status == 200) converted += 1
+      bytes += r.bytes
+      if (r.error.nonEmpty) failed += 1
+      origins += r.host
+      if (heaviestUrl == null || r.bytes > heaviestBytes ||
+        (r.bytes == heaviestBytes && r.url_canon < heaviestUrl)) {
+        heaviestUrl = r.url_canon; heaviestBytes = r.bytes
+      }
+      redirects += r.redirects
+      outlinks += r.outlinks.size
+    }
+
+    def result: PartitionMetrics = PartitionMetrics(pid, round, fetched, converted,
+      bytes, failed, origins.size.toLong, heaviestUrl, heaviestBytes, redirects, outlinks)
+  }
+
+  /** The round's lazily planned output tables, over the cached
+    * admission and fetch frames.
+    */
+  private[graft] final case class RoundTables(
+      frontier: DataFrame, spans: DataFrame, fetchLog: DataFrame,
+      seenDelta: DataFrame, pendingNext: DataFrame)
+
+  /** Steps 1–5 of a round, one lazy plan: canonicalize + hash → robots
+    * verdict (counted by `robotsObs`) → in-batch dedup → URL-seen layer
+    * → salted frontier entries stamped with `round`. Returns the verdict
+    * frame as it was before the observation (the counters' fallback
+    * source) and the frontier.
+    */
+  private[graft] def frontierOf(
+      spark: SparkSession, pending: Dataset[PendingUrl], robots: Seq[RobotsRule],
+      hostMap: Dataset[HostIps], seen: DataFrame, bloomLayer: UrlSeen.BloomLayer,
+      cuckooDir: Option[String], cuckooBuckets: Int, saltsPerHost: Int, round: Int,
+      robotsObs: Observation): (DataFrame, Dataset[FrontierEntry]) = {
+    import spark.implicits._
+    // 1. canonicalize + hash via the native codegen expression — the
+    //    single-pass parser inside WholeStageCodegen (no scalar UDF, no
+    //    regex stack; UrlExprParitySpec pins equality with both twins)
+    val withCanon = pending.toDF()
+      .withColumn("url_canon", graft.functions.UrlExprs.canonicalize(col("url")))
+      .withColumn("url_hash", UrlFunctions.urlHashCol(col("url_canon")))
+
+    // 2. robots / allow-deny / IP-class admission (broadcast join).
+    // Counters ride the pipeline via observe() — no separate job.
+    // Not persisted: the chain below it is materialized by exactly one
+    // action (the frontier write; everything downstream reads the
+    // admissions cache), so caching 10^6+ rows here is a pure write
+    val decidedRaw = RobotsFilter.decide(spark, withCanon, "url_canon", robots, hostMap, assumeNormalized = true)
+    val allowed = decidedRaw
+      .observe(robotsObs,
+        count(lit(1)).as("total"),
+        sum(when(col("robots_verdict") =!= "ok", 1L).otherwise(0L)).as("denied"))
+      .filter(col("robots_verdict") === "ok")
+
+    // 3. in-batch dedup: one row per url_canon — best priority, first
+    //    seq. Keyed on url_canon ALONE (url_hash is functionally
+    //    dependent) so this exchange is REUSED by the exact anti-join
+    //    downstream — one shuffle, not two.
+    val dedup = allowed.groupBy("url_canon")
+      .agg(max("url_hash").as("url_hash"),
+        max("priority").as("priority"), min("seq").as("seq"))
+
+    // 4. URL-seen layer (running bloom → persisted cuckoo → exact
+    //    anti-join); both sketches were maintained incrementally at the
+    //    end of the previous round — nothing is rebuilt here
+    val newUrls = UrlSeen.filterNew(spark, dedup, seen, bloomLayer, cuckooDir, cuckooBuckets)
+
+    // 5. frontier entries with salted host hash (codegen Column twin).
+    // `url` always equals `url_canon` at this point, so it rides the
+    // round's ONE full shuffle as an empty string (~35% of the entry's
+    // string bytes) and is restored after admission — shuffle bytes are
+    // the memory traffic that inflates task time at high parallelism.
+    // The round is a bound reference, not a literal: a literal is
+    // inlined into three whole-stage classes, new ones every round.
+    val frontier = newUrls
+      .withColumn("host", graft.functions.UrlExprs.host(col("url_canon")))
+      .withColumn("host_hash",
+        UrlFunctions.hostSaltCol(col("host"), col("url_hash"), saltsPerHost))
+      .withColumn("round", BoundIntExpr.col(round))
+      .withColumn("url", lit(""))
+      .select("url", "url_canon", "url_hash", "host", "host_hash", "priority", "seq", "round")
+      .as[FrontierEntry]
+    (decidedRaw, frontier)
+  }
+
+  /** The admitted entries of an admission frame — a columnar split (no
+    * per-row Admission object churn); the typed view is only
+    * re-materialized where the fetch genuinely needs FrontierEntry
+    * objects.
+    */
+  private[graft] def admittedOf(admissions: Dataset[Politeness.Admission]): Dataset[FrontierEntry] = {
+    import admissions.sparkSession.implicits._
+    admissions.toDF().filter(col("admitted")).select("entry.*").as[FrontierEntry]
+  }
+
+  /** Step 8: fetch + decompose + convert, narrow and partition-local.
+    * Each task folds its partition's `metrics` row while the rows
+    * stream out and adds it to `metricsAcc` once the partition is
+    * exhausted. A recomputed partition adds the same row again, so
+    * readers keep one row per `partition_id`.
+    */
+  private[graft] def fetchOf(
+      admitted: Dataset[FrontierEntry], universe: SyntheticWeb.Universe, cfg: CrawlConfig,
+      opts: ConvertPipeline.Options, round: Int,
+      metricsAcc: CollectionAccumulator[PartitionMetrics]): Dataset[FetchedRow] = {
+    import admitted.sparkSession.implicits._
+    val uni = universe
+    val hardTimeoutMs = cfg.softTimeoutMs + 5000L // api/api.go:511 grace
+    admitted.mapPartitions { it =>
+      val pid = TaskContext.getPartitionId()
+      val fold = new MetricsFold(pid, round)
+      val rows = it.map { e =>
+        val f = uni.fetch(e)
+        val row =
+          if (f.error.nonEmpty)
+            FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
+              f.bytes, f.error, Nil, f.url_canon, Nil,
+              duration_ms = f.duration_ms, redirects = f.redirects, final_url = f.final_url)
+          else if (f.duration_ms > hardTimeoutMs)
+            // per-row deadline budget: a hung fetch routes to the error
+            // channel (ErrFiltered-style classification) instead of
+            // occupying the slot — outlinks are NOT followed, matching
+            // the reference's cancelled-context semantics
+            FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
+              f.bytes, s"deadline: fetch exceeded hard timeout (${hardTimeoutMs}ms)",
+              Nil, f.url_canon, Nil,
+              f.cookies_applied, f.headers_applied, f.duration_ms,
+              f.redirects, f.final_url)
+          else if (f.status == 301 || f.status == 302)
+            // redirect: no content to convert; the Location target rides
+            // outlinks so next round's FULL admission stack re-validates
+            // the hop (robots/IP-class — the outbound.go:356-392 posture)
+            // and the seen layer extinguishes cycles
+            FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
+              f.bytes, "", f.outlinks, f.url_canon, Nil,
+              f.cookies_applied, f.headers_applied, f.duration_ms,
+              f.redirects, f.final_url)
+          else {
+            val conv = ConvertPipeline(f.doc, opts)
+            if (conv.isError)
+              FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
+                f.bytes, conv.error, f.outlinks, f.url_canon, Nil,
+                f.cookies_applied, f.headers_applied, f.duration_ms,
+                f.redirects, f.final_url)
+            else {
+              val out = if (conv.docs.length == 1) conv.docs.head
+                else SpanOps.merge(conv.docs, f.url_canon)
+              FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
+                f.bytes, "", f.outlinks, out.doc_id, out.spans,
+                f.cookies_applied, f.headers_applied, f.duration_ms,
+                f.redirects, f.final_url)
+            }
+          }
+        fold.add(row)
+        row
+      }
+      // published AFTER the input is exhausted (lazy tail); an empty
+      // partition has no metrics row, as under a groupBy
+      rows ++ Iterator.single(()).flatMap { _ =>
+        if (fold.fetched > 0) metricsAcc.add(fold.result)
+        Iterator.empty
+      }
+    }
+  }
+
+  /** Steps 7, 9–11: the frontier snapshot, the output spans, the per-URL
+    * fetch log, the seen delta and the next pending set — every plan a
+    * narrow projection of the cached frames, with no per-round constant.
+    */
+  private[graft] def tablesOf(admissions: Dataset[Politeness.Admission],
+                              fetched: Dataset[FetchedRow]): RoundTables = {
+    val admitted = admittedOf(admissions).toDF()
+    // 7. sorted frontier snapshot — already partitioned by host_hash
+    //    from the admission shuffle; sort within, no re-shuffle.
+    //    `url` (blanked for the shuffle) is restored for the table.
+    val frontier = admitted
+      .withColumn("url", col("url_canon"))
+      .sortWithinPartitions(col("priority").desc, col("seq"), col("url_canon"))
+    // 9. spans snapshot, sorted in-partition (no re-shuffle of the heavy
+    //    payload). A Column predicate: a typed filter would deserialize
+    //    every row, spans included, to test two scalars.
+    val spans = fetched.toDF()
+      .filter(col("error") === "" && col("status") === 200)
+      .select(col("doc_id"), col("spans"), col("round"))
+      .sortWithinPartitions("doc_id")
+    // per-URL lineage (FIXTURES.md fetch_log): slim projection of the
+    // cached fetch frame — status/bytes/error per URL, no spans
+    val fetchLog = fetched.toDF().select("url_canon", "url_hash", "host", "round",
+      "partition_id", "status", "bytes", "error",
+      "cookies_applied", "headers_applied", "duration_ms",
+      "redirects", "final_url")
+    // 10. seen ∪ admitted — DELTA only (O(new), the Iceberg append):
+    //     readers union url_seen_delta across snapshots
+    val seenDelta = admitted.select(col("url_canon"), col("url_hash"),
+      col("round").as("round_first_seen"))
+    // 11. next pending = deferred ∪ outlinks of this round — fully
+    // columnar (codegen posexplode + hash; no PendingUrl object per
+    // outlink). `hash()` IS UrlFunctions.murmur3 (Murmur3_x86_32, seed
+    // 42, UTF-8 bytes), so seq values are bit-identical to the
+    // reference model's — DeterminismSpec/CrawlJobSpec pin it.
+    val outlinks = fetched.toDF()
+      .select(col("url_canon"), col("round"),
+        posexplode(col("outlinks")).as(Seq("i", "url")))
+      .select(col("url"),
+        (lit(1.0) / (col("round") + lit(2))).as("priority"),
+        hash(concat(col("url_canon"), lit("#"), col("i").cast("string")))
+          .cast("long").bitwiseAND(lit(Long.MaxValue)).as("seq"))
+    val pendingNext = admissions.toDF().filter(!col("admitted"))
+      .select(col("entry.url_canon").as("url"), col("entry.priority").as("priority"),
+        col("entry.seq").as("seq"))
+      .unionByName(outlinks)
+    RoundTables(frontier, spans, fetchLog, seenDelta, pendingNext)
+  }
 
   private val timing = sys.env.get("GRAFT_TIMING").contains("1")
 
@@ -95,25 +344,25 @@ object CrawlJob {
         s"snapshot v$c has interrupted-maintenance debris (${debris.mkString(", ")}): " +
           "repair (or remove after inspection) before resuming the crawl")
     }
+    // the checkpoint's self-describing parameters and counters
+    val resumeMeta: Map[String, String] =
+      store.currentSnapshot.map(store.manifestMeta).getOrElse(Map.empty)
     // sketch partitioning is a property of the CHECKPOINT, not the
     // caller: resuming with a different cfg.cuckooBuckets would hash
     // url_hash to the wrong bucket-N.bin, turn cuckoo "no"s into lies
     // and re-admit seen URLs — so the committed value always wins
-    val cuckooBuckets: Int = store.currentSnapshot
-      .flatMap(c => store.manifestMeta(c).get("cuckoo_buckets"))
-      .map(_.toInt).getOrElse(cfg.cuckooBuckets)
+    val cuckooBuckets: Int =
+      resumeMeta.get("cuckoo_buckets").map(_.toInt).getOrElse(cfg.cuckooBuckets)
     // same pinning for the doc-dedup shingle width: resuming with a
     // different k would band fresh signatures against incomparable
     // stored ones — the checkpoint's value wins
-    val dedupShingleK: Int = store.currentSnapshot
-      .flatMap(c => store.manifestMeta(c).get("dedup_k"))
-      .map(_.toInt).getOrElse(cfg.dedupShingleK)
+    val dedupShingleK: Int =
+      resumeMeta.get("dedup_k").map(_.toInt).getOrElse(cfg.dedupShingleK)
     // and the threshold: a mid-crawl switch would break the invariant
     // that the union of per-round doc_dup_pairs equals one batch LSH
     // run over all docs (CrawlDedupSpec/FIXTURES.md)
-    val dedupThreshold: Double = store.currentSnapshot
-      .flatMap(c => store.manifestMeta(c).get("dedup_threshold"))
-      .map(_.toDouble).getOrElse(cfg.dedupThreshold)
+    val dedupThreshold: Double =
+      resumeMeta.get("dedup_threshold").map(_.toDouble).getOrElse(cfg.dedupThreshold)
     var seen: DataFrame =
       store.currentSnapshot
         .filter(store.hasTable(_, "url_seen_delta"))
@@ -122,7 +371,11 @@ object CrawlJob {
       if (startRound == 0) seeds.map(s => PendingUrl(s.url, s.priority, s.seq))
       else store.readOrEmpty(spark, store.currentSnapshot,
         "pending", Seq.empty[PendingUrl].toDF()).as[PendingUrl]
-    var seenCount: Long = if (startRound == 0) 0L else seen.count()
+    // the manifest carries the exact total; only a checkpoint written
+    // before it did pays a count of the whole seen union
+    var seenCount: Long =
+      if (startRound == 0) 0L
+      else resumeMeta.get("seen_total").map(_.toLong).getOrElse(seen.count())
 
     // ---- incremental seen-sketch state (maintenance is O(round delta);
     //      nothing below ever rebuilds from the seen union in steady
@@ -135,8 +388,6 @@ object CrawlJob {
     // bytes into a task closure (the "task of very large size" warning)
     // and pay a Spark job for what is a single driver-side stream copy.
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val resumeMeta: Map[String, String] =
-      store.currentSnapshot.map(store.manifestMeta).getOrElse(Map.empty)
     // sharded mode (10^10 escape hatch) is, like the bucket count, a
     // property of the checkpoint
     val bloomSharded: Boolean =
@@ -237,57 +488,15 @@ object CrawlJob {
       //    overwrite, and commit manifests every dir it finds
       store.clearStaged(round)
 
-      // 1. canonicalize + hash via the native codegen expression — the
-      //    single-pass parser inside WholeStageCodegen (no scalar UDF, no
-      //    regex stack; UrlExprParitySpec pins equality with both twins)
-      val withCanon = pending.toDF()
-        .withColumn("url_canon", graft.functions.UrlExprs.canonicalize(col("url")))
-        .withColumn("url_hash", UrlFunctions.urlHashCol(col("url_canon")))
-
-      // 2. robots / allow-deny / IP-class admission (broadcast join).
-      // Counters ride the pipeline via observe() — no separate job.
-      val robotsObs = new org.apache.spark.sql.Observation(s"robots-$round")
-      // not persisted: the chain below it is materialized by exactly one
-      // action (the frontier write; everything downstream reads the
-      // admissions cache), so caching 10^6+ rows here is a pure write
-      val decidedRaw = RobotsFilter.decide(spark, withCanon, "url_canon", robots, hostMap, assumeNormalized = true)
-      val decided = decidedRaw
-        .observe(robotsObs,
-          count(lit(1)).as("total"),
-          sum(when(col("robots_verdict") =!= "ok", 1L).otherwise(0L)).as("denied"))
-      val allowed = decided.filter(col("robots_verdict") === "ok")
-
-      // 3. in-batch dedup: one row per url_canon — best priority, first
-      //    seq. Keyed on url_canon ALONE (url_hash is functionally
-      //    dependent) so this exchange is REUSED by the exact anti-join
-      //    downstream — one shuffle, not two.
-      val dedup = allowed.groupBy("url_canon")
-        .agg(max("url_hash").as("url_hash"),
-          max("priority").as("priority"), min("seq").as("seq"))
-
-      // 4. URL-seen layer (running bloom → persisted cuckoo → exact
-      //    anti-join); both sketches were maintained incrementally at the
-      //    end of the previous round — nothing is rebuilt here
+      // 1–5. canonicalize → robots → in-batch dedup → seen layer →
+      //      salted frontier entries (one lazy plan, see frontierOf)
+      val robotsObs = new Observation(s"robots-$round")
       val bloomLayer: UrlSeen.BloomLayer = bloomBcOpt match {
         case Some(bc) => UrlSeen.BroadcastBloom(bc)
         case None => bloomShardDir.map(UrlSeen.ShardedBloom.apply).getOrElse(UrlSeen.NoBloom)
       }
-      val newUrls = UrlSeen.filterNew(spark, dedup, seen, bloomLayer, cuckooDir, cuckooBuckets)
-
-      // 5. frontier entries with salted host hash (codegen Column twin).
-      // `url` always equals `url_canon` at this point, so it rides the
-      // round's ONE full shuffle as an empty string (~35% of the
-      // entry's string bytes) and is restored after admission — shuffle
-      // bytes are the memory traffic that inflates task time at high
-      // parallelism.
-      val frontier = newUrls
-        .withColumn("host", graft.functions.UrlExprs.host(col("url_canon")))
-        .withColumn("host_hash",
-          UrlFunctions.hostSaltCol(col("host"), col("url_hash"), cfg.saltsPerHost))
-        .withColumn("round", lit(round))
-        .withColumn("url", lit(""))
-        .select("url", "url_canon", "url_hash", "host", "host_hash", "priority", "seq", "round")
-        .as[FrontierEntry]
+      val (decidedRaw, frontier) = frontierOf(spark, pending, robots, hostMap, seen,
+        bloomLayer, cuckooDir, cuckooBuckets, cfg.saltsPerHost, round, robotsObs)
 
       // 6. politeness admission — THE full shuffle of the round.
       // Admission counters come from accumulators filled during the
@@ -295,20 +504,16 @@ object CrawlJob {
       val admAcc = spark.sparkContext.longAccumulator(s"admitted-$round")
       val defAcc = spark.sparkContext.longAccumulator(s"deferred-$round")
       val admissions = Politeness.admit(spark, frontier, cfg, Some((admAcc, defAcc))).persist()
-      // columnar split (no per-row Admission object churn): the typed
-      // view is only re-materialized where the fetch genuinely needs
-      // FrontierEntry objects
-      val admitted = admissions.toDF().filter(col("admitted"))
-        .select("entry.*").as[FrontierEntry]
+      val admitted = admittedOf(admissions)
+      // 8. fetch + decompose + convert (narrow, partition-local); the
+      //    partition's metrics row folds in the same pass
+      val metricsAcc = spark.sparkContext.collectionAccumulator[PartitionMetrics](s"metrics-$round")
+      val fetched = fetchOf(admitted, universe, cfg, convertOptions, round, metricsAcc).persist()
+      val t = tablesOf(admissions, fetched)
 
-      // 7. sorted frontier snapshot — already partitioned by host_hash
-      //    from the admission shuffle; sort within, no re-shuffle.
-      //    `url` (blanked for the shuffle) is restored for the table.
+      // 7. sorted frontier snapshot (materializes the admissions cache)
       spark.sparkContext.setJobDescription("frontier-write")
-      timed("frontier-write")(store.write(admitted.toDF()
-        .withColumn("url", col("url_canon"))
-        .sortWithinPartitions(col("priority").desc, col("seq"), col("url_canon")),
-        round, "frontier"))
+      timed("frontier-write")(store.write(t.frontier, round, "frontier"))
       val robotsMetrics = robotsObs.get
       val (candidateCount, deniedCount) =
         if (robotsMetrics.contains("total"))
@@ -331,99 +536,20 @@ object CrawlJob {
       val admittedCount = admAcc.value.longValue()
       val deferredCount = defAcc.value.longValue()
 
-      // 8. fetch + decompose + convert (narrow, partition-local)
-      val uni = universe
-      val opts = convertOptions
-      val hardTimeoutMs = cfg.softTimeoutMs + 5000L // api/api.go:511 grace
-      val fetched = admitted.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        it.map { e =>
-          val f = uni.fetch(e)
-          if (f.error.nonEmpty)
-            FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
-              f.bytes, f.error, Nil, f.url_canon, Nil,
-              duration_ms = f.duration_ms, redirects = f.redirects, final_url = f.final_url)
-          else if (f.duration_ms > hardTimeoutMs)
-            // per-row deadline budget: a hung fetch routes to the error
-            // channel (ErrFiltered-style classification) instead of
-            // occupying the slot — outlinks are NOT followed, matching
-            // the reference's cancelled-context semantics
-            FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
-              f.bytes, s"deadline: fetch exceeded hard timeout (${hardTimeoutMs}ms)",
-              Nil, f.url_canon, Nil,
-              f.cookies_applied, f.headers_applied, f.duration_ms,
-              f.redirects, f.final_url)
-          else if (f.status == 301 || f.status == 302)
-            // redirect: no content to convert; the Location target rides
-            // outlinks so next round's FULL admission stack re-validates
-            // the hop (robots/IP-class — the outbound.go:356-392 posture)
-            // and the seen layer extinguishes cycles
-            FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
-              f.bytes, "", f.outlinks, f.url_canon, Nil,
-              f.cookies_applied, f.headers_applied, f.duration_ms,
-              f.redirects, f.final_url)
-          else {
-            val conv = ConvertPipeline(f.doc, opts)
-            if (conv.isError)
-              FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
-                f.bytes, conv.error, f.outlinks, f.url_canon, Nil,
-                f.cookies_applied, f.headers_applied, f.duration_ms,
-                f.redirects, f.final_url)
-            else {
-              val out = if (conv.docs.length == 1) conv.docs.head
-                else SpanOps.merge(conv.docs, f.url_canon)
-              FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
-                f.bytes, "", f.outlinks, out.doc_id, out.spans,
-                f.cookies_applied, f.headers_applied, f.duration_ms,
-                f.redirects, f.final_url)
-            }
-          }
-        }
-      }.persist()
-
-      // 9. outputs: spans snapshot (sorted in-partition, no re-shuffle of
-      //    the heavy payload) + per-partition lineage metrics
+      // 9. output spans (materializes the fetch cache, and with it the
+      //    per-partition metrics rows)
       spark.sparkContext.setJobDescription("spans-write")
-      timed("fetch+convert+spans-write")(store.write(
-        fetched.filter(r => r.error.isEmpty && r.status == 200)
-          .select($"doc_id", $"spans", $"round")
-          .sortWithinPartitions("doc_id"),
-        round, "output_spans"))
+      timed("fetch+convert+spans-write")(store.write(t.spans, round, "output_spans"))
+      val metricRows = metricsAcc.value.asScala.toSeq
+        .groupBy(_.partition_id).values.map(_.head).toSeq.sortBy(_.partition_id)
 
       // ---- steps 9-11 are independent jobs over the cached frames;
       //      each runs on the io pool, awaited together before commit ----
 
-      // per-partition lineage metrics: ONE aggregation job; the rows are
-      // tiny (≤ numPartitions), so global fetch stats derive locally and
-      // the metrics table is written from the collected rows
-      val metricsDf = fetched.toDF().groupBy("partition_id", "round").agg(
-        count(lit(1)).as("urls_fetched"),
-        sum(when(col("error") === "" && col("status") === 200, 1L).otherwise(0L))
-          .as("urls_converted"),
-        sum("bytes").as("bytes_total"),
-        sum(when(col("error") =!= "", 1L).otherwise(0L)).as("failed_count"),
-        approx_count_distinct("host").as("unique_origins"),
-        max_by(col("url_canon"), col("bytes")).as("heaviest_url"),
-        max("bytes").as("heaviest_bytes"),
-        sum(size(col("outlinks"))).as("outlinks_total"),
-        // appended LAST: the positional reads below (urls_fetched at 2,
-        // failed_count at 5, outlinks_total at 9) must stay stable
-        sum(col("redirects").cast("long")).as("redirects_total"))
-      val metricsFut = job("metrics") {
-        val rows = metricsDf.collect()
-        store.write(spark.createDataFrame(java.util.Arrays.asList(rows: _*), metricsDf.schema)
-          .drop("outlinks_total").coalesce(1), round, "metrics")
-        rows
-      }
-
-      // per-URL lineage (FIXTURES.md fetch_log): slim projection of the
-      // cached fetch frame — status/bytes/error per URL, no spans
-      val fetchLogFut = job("fetch-log-write")(store.write(
-        fetched.toDF().select("url_canon", "url_hash", "host", "round",
-          "partition_id", "status", "bytes", "error",
-          "cookies_applied", "headers_applied", "duration_ms",
-          "redirects", "final_url"),
-        round, "fetch_log"))
+      // per-partition lineage metrics: the folded rows, one small write
+      val metricsFut = job("metrics")(store.write(
+        metricRows.toDS().drop("outlinks_total").coalesce(1), round, "metrics"))
+      val fetchLogFut = job("fetch-log-write")(store.write(t.fetchLog, round, "fetch_log"))
 
       // 9b. OPT-IN incremental doc near-dup: this round's converted
       // docs dedup against the ACCUMULATED minhash_index (delta-append
@@ -452,10 +578,10 @@ object CrawlJob {
           val (pairs, deltaIndex, caches) = Dedup.minhashIncrementalPairsWithCaches(
             docsRound, corpus, index,
             k = dedupShingleK, threshold = dedupThreshold, seed = cfg.seed)
-          store.write(pairs.withColumn("round", lit(round)), round, "doc_dup_pairs")
+          store.write(pairs.withColumn("round", BoundIntExpr.col(round)), round, "doc_dup_pairs")
           // `round` makes the index compactable (hidden-partitioned by
           // round) under cfg.compactEvery maintenance
-          store.write(deltaIndex.withColumn("round", lit(round)), round, "minhash_index")
+          store.write(deltaIndex.withColumn("round", BoundIntExpr.col(round)), round, "minhash_index")
           // release the stage's caches — a long crawl must not
           // accumulate per-round cached frames (the admissions/fetched
           // discipline of the main loop)
@@ -463,16 +589,18 @@ object CrawlJob {
         }
 
       // 10. seen ∪ admitted — DELTA write only (O(new), the Iceberg
-      //     append): readers union url_seen_delta across snapshots.
+      //     append). The write counts its own rows: the manifest's
+      //     seen_total must equal the rows readers will union, which an
+      //     accumulator refilled by a recomputed partition would not.
       //     Both sketches fold in ONLY this round's delta:
       //       - bloom: collect+insert for small deltas (O(delta·8B)
       //         through the driver), distributed OR-merge otherwise;
       //         then re-broadcast + a driver-side blob-file write
       //       - cuckoo: executor-side cogroup of delta hashes with the
       //         persisted blobs; bytes never visit the driver
-      val newSeen = admitted.toDF().select(col("url_canon"), col("url_hash"),
-        col("round").as("round_first_seen"))
-      val seenFut = job("seen-write")(store.write(newSeen, round, "url_seen_delta"))
+      val seenObs = new Observation(s"seen-delta-$round")
+      val seenFut = job("seen-write")(store.write(
+        t.seenDelta.observe(seenObs, count(lit(1)).as("rows")), round, "url_seen_delta"))
 
       val bloomFut: scala.concurrent.Future[Any] =
         if (bloomSharded) scala.concurrent.Future.successful(()) // shards ride the cuckoo job
@@ -482,7 +610,7 @@ object CrawlJob {
             if (admittedCount <= cfg.bloomCollectThreshold)
               admitted.toDF().select(col("url_hash")).as[Long].collect().foreach(bloom.putLong)
             else
-              bloom.mergeInPlace(UrlSeen.bloomOfDelta(newSeen, bloomCapacity, bloomFpp))
+              bloom.mergeInPlace(UrlSeen.bloomOfDelta(t.seenDelta, bloomCapacity, bloomFpp))
             // unpersist (not destroy): cached lineage from this round may
             // still reference the old broadcast; a re-fetch would resend
             // the mutated bloom, which only ADDS keys — extra maybe-seen
@@ -510,36 +638,25 @@ object CrawlJob {
         // `_DONE` marks the blob dir only after that action succeeds.
         val binDir = s"${store.snapshotDir(round)}/cuckoo_bin"
         store.write(UrlSeen.updateCuckoo(spark, cuckoo,
-          newSeen.select("url_hash"), perBucketCapacity, cuckooBuckets,
+          t.seenDelta.select("url_hash"), perBucketCapacity, cuckooBuckets,
           blobDir = Some(binDir), bloomShards = shardSpec), round, "cuckoo")
         UrlSeen.finishCuckooDir(binDir, hadoopConf)
       }
 
-      // 11. next pending = deferred ∪ outlinks of this round — fully
-      // columnar (codegen posexplode + hash; no PendingUrl object per
-      // outlink). `hash()` IS UrlFunctions.murmur3 (Murmur3_x86_32,
-      // seed 42, UTF-8 bytes), so seq values are bit-identical to the
-      // reference model's — DeterminismSpec/CrawlJobSpec pin it.
-      val outlinks = fetched.toDF()
-        .select(col("url_canon"), col("round"),
-          posexplode(col("outlinks")).as(Seq("i", "url")))
-        .select(col("url"),
-          (lit(1.0) / (col("round") + lit(2))).as("priority"),
-          hash(concat(col("url_canon"), lit("#"), col("i").cast("string")))
-            .cast("long").bitwiseAND(lit(Long.MaxValue)).as("seq"))
-      val pendingNext = admissions.toDF().filter(!col("admitted"))
-        .select(col("entry.url_canon").as("url"), col("entry.priority").as("priority"),
-          col("entry.seq").as("seq"))
-        .unionByName(outlinks)
-      val pendingFut = job("pending-write")(store.write(pendingNext, round, "pending"))
+      val pendingFut = job("pending-write")(store.write(t.pendingNext, round, "pending"))
 
       // barrier: everything staged under v<round> must exist before the
       // atomic commit makes the snapshot visible
-      val metricRows = await(metricsFut)
-      val fetchedCount = metricRows.map(_.getLong(2)).sum
-      val failedCount = metricRows.map(_.getLong(5)).sum
-      val outlinkCount = metricRows.map(r => if (r.isNullAt(9)) 0L else r.getLong(9)).sum
-      Seq(fetchLogFut, seenFut, bloomFut, cuckooFut, pendingFut, dedupFut).foreach(await)
+      Seq(metricsFut, fetchLogFut, seenFut, bloomFut, cuckooFut, pendingFut, dedupFut).foreach(await)
+      val fetchedCount = metricRows.map(_.urls_fetched).sum
+      val failedCount = metricRows.map(_.failed_count).sum
+      val outlinkCount = metricRows.map(_.outlinks_total).sum
+      // AQE drops the observation only when the delta is empty; the
+      // count of the written table covers that case without guessing
+      val seenDeltaCount: Long = seenObs.get.get("rows") match {
+        case Some(n: java.lang.Long) => n.longValue()
+        case _ => store.read(spark, round, "url_seen_delta").count()
+      }
 
       // 12. atomic commit → resumable checkpoint. With cfg.wapAudit the
       // commit splits into Iceberg's write–audit–publish: stage the
@@ -549,7 +666,7 @@ object CrawlJob {
       // staged dir and fails the round with durable state intact.
       val commitMeta = Map(
         "admitted" -> admittedCount.toString,
-        "seen_total" -> (seenCount + admittedCount).toString,
+        "seen_total" -> (seenCount + seenDeltaCount).toString,
         "cuckoo_buckets" -> cuckooBuckets.toString,
         "bloom_capacity" -> bloomCapacity.toString,
         "bloom_fpp" -> bloomFpp.toString,
@@ -569,7 +686,7 @@ object CrawlJob {
             val r = store.read(spark, round, "url_seen_delta").agg(
               count(lit(1)),
               coalesce(sum(when(col("url_canon").isNull ||
-                col("round_first_seen") =!= round, 1L).otherwise(0L)), lit(0L))).head()
+                col("round_first_seen") =!= BoundIntExpr.col(round), 1L).otherwise(0L)), lit(0L))).head()
             (r.getLong(0), r.getLong(1))
           }
         if (audited._1 != admittedCount || audited._2 != 0L) {
@@ -584,8 +701,8 @@ object CrawlJob {
 
       stats += RoundStats(round, candidateCount, deniedCount,
         admittedCount + deferredCount, admittedCount, deferredCount,
-        fetchedCount, failedCount, outlinkCount, seenCount + admittedCount)
-      seenCount += admittedCount
+        fetchedCount, failedCount, outlinkCount, seenCount + seenDeltaCount)
+      seenCount += seenDeltaCount
 
       // 12b. OPT-IN snapshot maintenance (Iceberg rewrite_data_files +
       // expire_snapshots): fold the cross-round delta tables into the
@@ -622,7 +739,9 @@ object CrawlJob {
       cuckooDir = Some(s"${store.snapshotDir(round)}/cuckoo_bin")
       if (bloomSharded) bloomShardDir = cuckooDir // shards rode this round's cogroup
 
-      admissions.unpersist(); fetched.unpersist()
+      // blocking: the round's blocks are gone before the call returns,
+      // so a long-lived session does not carry them into the next one
+      admissions.unpersist(blocking = true); fetched.unpersist(blocking = true)
 
       continue = admittedCount > 0
       round += 1

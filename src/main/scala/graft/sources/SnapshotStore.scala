@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -12,10 +13,20 @@ import scala.jdk.CollectionConverters._
   *
   * Layout:
   * {{{
-  *   <root>/v<N>/<table>/           parquet data per snapshot
-  *   <root>/v<N>/MANIFEST.json      tables + row counts + round
-  *   <root>/CURRENT                 text file: committed snapshot id
+  *   <root>/v<N>/<table>/              parquet data per snapshot
+  *   <root>/v<N>/<table>/_SCHEMA.json  the schema `write` wrote (Spark JSON)
+  *   <root>/v<N>/MANIFEST.json         snapshot id, round, table names, meta
+  *   <root>/CURRENT                    text file: committed snapshot id
   * }}}
+  *
+  * `meta` holds the checkpoint's parameters and counters (sketch
+  * layout, `admitted`, `seen_total`); no per-table row counts are kept.
+  * Reads of a table with a recorded schema pass it to
+  * `spark.read.schema(…)` and so start no Spark job: parquet schema
+  * inference (one job per read) stays only for tables without one —
+  * checkpoints that predate the file, and hidden-partitioned tables
+  * that maintenance assembled by rename. Parquet readers skip files
+  * whose names start with `_`, so the schema file is invisible to scans.
   *
   * Commit protocol: write everything under `v<N>` (invisible to readers),
   * then atomically move `CURRENT.tmp` → `CURRENT`. A crashed round leaves
@@ -47,23 +58,37 @@ final class SnapshotStore(val root: String) {
   private def transformMarker(id: Int, table: String): Path =
     Paths.get(tablePath(id, table), "_PARTITION_TRANSFORM")
 
-  def read(spark: SparkSession, id: Int, table: String): DataFrame = {
-    // a maintained base can hold files of MIXED schemas in one dir (the
-    // incremental carry renames pre-evolution partitions in beside the
-    // rewritten tail); without footer merging a single arbitrary footer
-    // would win and silently drop an added column. Plain per-round
-    // deltas stay on the cheap single-footer path.
-    val reader =
-      if (partitionTransform(id, table).isDefined)
-        spark.read.option("mergeSchema", "true")
-      else spark.read
-    val df = reader.parquet(tablePath(id, table))
-    if (df.columns.contains(HiddenPartCol)) df.drop(HiddenPartCol) else df
-  }
+  private def schemaFile(id: Int, table: String): Path =
+    Paths.get(tablePath(id, table), "_SCHEMA.json")
+
+  /** The schema [[write]] recorded for a plain table; None for a table
+    * written before schemas were recorded and for hidden-partitioned
+    * tables (their layout is assembled by maintenance, not by `write`).
+    */
+  def recordedSchema(id: Int, table: String): Option[StructType] =
+    if (partitionTransform(id, table).isDefined || !Files.exists(schemaFile(id, table))) None
+    else Some(DataType.fromJson(Files.readString(schemaFile(id, table))).asInstanceOf[StructType])
+
+  def read(spark: SparkSession, id: Int, table: String): DataFrame =
+    recordedSchema(id, table) match {
+      case Some(schema) => spark.read.schema(schema).parquet(tablePath(id, table))
+      case None =>
+        // a maintained base can hold files of MIXED schemas in one dir
+        // (the incremental carry renames pre-evolution partitions in
+        // beside the rewritten tail); without footer merging a single
+        // arbitrary footer would win and silently drop an added column.
+        // Plain per-round deltas stay on the cheap single-footer path.
+        val reader =
+          if (partitionTransform(id, table).isDefined)
+            spark.read.option("mergeSchema", "true")
+          else spark.read
+        val df = reader.parquet(tablePath(id, table))
+        if (df.columns.contains(HiddenPartCol)) df.drop(HiddenPartCol) else df
+    }
 
   def readOrEmpty(spark: SparkSession, id: Option[Int], table: String, like: DataFrame): DataFrame =
     id.filter(hasTable(_, table)) match {
-      case Some(s) => spark.read.parquet(tablePath(s, table))
+      case Some(s) => read(spark, s, table)
       case None => like.limit(0)
     }
 
@@ -87,6 +112,7 @@ final class SnapshotStore(val root: String) {
         df.sortWithinPartitions(sortWithinPartitionsBy.map(org.apache.spark.sql.functions.col): _*)
       else df
     out.write.mode(SaveMode.Overwrite).parquet(tablePath(id, table))
+    Files.writeString(schemaFile(id, table), out.schema.json)
   }
 
   /** Stage a table with a HIDDEN partition: rows are laid out under
@@ -593,8 +619,10 @@ final class SnapshotStore(val root: String) {
     // a single multi-root scan would try to unify — route them through
     // the per-snapshot union like mixed schemas
     val anyHidden = pruned.exists(id => partitionTransform(id, table).isDefined)
+    // the per-snapshot reads already know the one schema: handing it to
+    // the multi-root scan spares that scan its own inference job
     if (schemas.size == 1 && !anyHidden)
-      spark.read.parquet(pruned.map(tablePath(_, table)): _*)
+      spark.read.schema(schemas.head).parquet(pruned.map(tablePath(_, table)): _*)
     else frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 

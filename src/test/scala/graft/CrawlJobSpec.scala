@@ -1,10 +1,12 @@
 package graft
 
-import graft.frontier.UrlSeen
-import graft.model.CrawlConfig
-import graft.pipeline.CrawlJob
+import graft.frontier.{Politeness, UrlSeen}
+import graft.model.{CrawlConfig, SeenUrl}
+import graft.pipeline.{ConvertPipeline, CrawlJob}
 import graft.sources.{SnapshotStore, SyntheticWeb}
 import graft.testkit.ReferenceCrawl
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -318,5 +320,126 @@ class CrawlJobSpec extends SparkSpec {
     assert(badRows === 1L)
     store2.abandon(1)
     assert(store2.currentSnapshot === Some(0))
+  }
+
+  // ---- the round's fixed cost: codegen reuse, exact counters, hygiene ----
+
+  test("generated code is round-invariant: two round numbers plan the same sources") {
+    import spark.implicits._
+    val bloom = spark.sparkContext.broadcast(UrlSeen.emptyBloom(1L << 12, 0.01))
+    // the frontier chain and every post-fetch table, planned for `round`
+    def sources(round: Int): Seq[String] = {
+      val pending = seeds.map(s => CrawlJob.PendingUrl(s.url, s.priority, s.seq)).toDS()
+      val (_, frontier) = CrawlJob.frontierOf(spark, pending, robots, hostMap.toDS(),
+        Seq.empty[SeenUrl].toDF(), UrlSeen.BroadcastBloom(bloom), None, cfg.cuckooBuckets,
+        cfg.saltsPerHost, round, new Observation(s"robots-probe-$round"))
+      val admissions = Politeness.admit(spark, frontier, cfg)
+      val fetched = CrawlJob.fetchOf(CrawlJob.admittedOf(admissions), universe, cfg,
+        ConvertPipeline.Options(), round,
+        spark.sparkContext.collectionAccumulator[CrawlJob.PartitionMetrics])
+      val t = CrawlJob.tablesOf(admissions, fetched)
+      Seq(t.frontier, t.spans, t.fetchLog, t.seenDelta, t.pendingNext).flatMap(df =>
+        codegenStringSeq(df.queryExecution.executedPlan).map(_._2))
+    }
+    // whole-stage codegen shows in the plan only without AQE, which
+    // inserts it per query stage at run time
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (r3, r4) = (sources(3), sources(4))
+      assert(r3.nonEmpty)
+      assert(r3 === r4)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      bloom.destroy()
+    }
+  }
+
+  test("a crawl resumed one round per call keeps an exact seen_total, all-seen rounds included") {
+    import spark.implicits._
+    // a closed graph this small is exhausted within a few rounds, so a
+    // round arrives whose candidates were ALL seen before, then an
+    // empty one
+    val tiny = SyntheticWeb.Universe(numHosts = 3, pagesPerHost = 6, seed = 5L,
+      outlinksPerDoc = 3, spansPerDoc = 2)
+    val tinyHosts = SyntheticWeb.hostMap(tiny.numHosts)
+    val oneRound = CrawlConfig(numPartitions = 4, saltsPerHost = 2, hostBudgetPerRound = 4,
+      maxRounds = 1, bloomExpectedItems = 1 << 10)
+    Seq(false, true).foreach { wap =>
+      val root = Files.createTempDirectory(s"crawl-seen-total-$wap").toString
+      val store = new SnapshotStore(root)
+      val stats = (0 until 8).flatMap { _ =>
+        val st = CrawlJob.run(spark, tiny.seedUrls(6).toDS(), robots, tinyHosts.toDS(),
+          tiny, oneRound.copy(wapAudit = wap), root).rounds
+        val cur = store.currentSnapshot.get
+        val seenRows = store.readSeen(spark, cur).count()
+        assert(store.manifestMeta(cur)("seen_total").toLong === seenRows, s"wap=$wap round $cur")
+        st.foreach(r => assert(r.seenTotal === seenRows, s"wap=$wap round ${r.round}"))
+        st
+      }
+      assert(stats.map(_.round) === (0 until 8), s"wap=$wap")
+      // RoundStats.seenTotal is the running sum of admissions, as before
+      assert(stats.map(_.seenTotal) === stats.map(_.admitted).scanLeft(0L)(_ + _).tail, s"wap=$wap")
+      assert(stats.exists(r => r.candidates > 0 && r.newUrls == 0),
+        s"wap=$wap: no all-seen round in ${stats.mkString("; ")}")
+      assert(stats.last.candidates === 0L, s"wap=$wap")
+    }
+  }
+
+  test("metrics table: the partition-local fold writes the rows the aggregate wrote") {
+    summary
+    val store = new SnapshotStore(storeRoot)
+    (0 until cfg.maxRounds).foreach { r =>
+      val metrics = store.read(spark, r, "metrics")
+      assert(metrics.schema.map(f => f.name -> f.dataType.simpleString) === Seq(
+        "partition_id" -> "int", "round" -> "int", "urls_fetched" -> "bigint",
+        "urls_converted" -> "bigint", "bytes_total" -> "bigint", "failed_count" -> "bigint",
+        "unique_origins" -> "bigint", "heaviest_url" -> "string", "heaviest_bytes" -> "bigint",
+        "redirects_total" -> "bigint"))
+      // the aggregate the table was written by before, over the same
+      // fetched rows (fetch_log carries every column it reads)
+      val log = store.read(spark, r, "fetch_log")
+      val expected = log.groupBy("partition_id", "round").agg(
+        count(lit(1)).as("urls_fetched"),
+        sum(when(col("error") === "" && col("status") === 200, 1L).otherwise(0L)).as("urls_converted"),
+        sum("bytes").as("bytes_total"),
+        sum(when(col("error") =!= "", 1L).otherwise(0L)).as("failed_count"),
+        approx_count_distinct("host").as("hll_origins"),
+        countDistinct("host").as("unique_origins"),
+        max("bytes").as("heaviest_bytes"),
+        sum(col("redirects").cast("long")).as("redirects_total"))
+        .collect().map(row => row.getInt(0) -> row).toMap
+      // heaviest URL: byte ties go to the lexicographically first URL
+      val heaviest = log.select("partition_id", "url_canon", "bytes").collect()
+        .groupBy(_.getInt(0)).map { case (p, rows) =>
+          p -> rows.minBy(x => (-x.getLong(2), x.getString(1))).getString(1)
+        }
+      val got = metrics.collect()
+      assert(got.map(_.getInt(0)).toSet === expected.keySet, s"round $r partitions")
+      got.foreach { m =>
+        val e = expected(m.getInt(0))
+        val ctx = s"round $r partition ${m.getInt(0)}"
+        assert(m.getInt(1) === r, ctx)
+        Seq("urls_fetched", "urls_converted", "bytes_total", "failed_count",
+          "unique_origins", "heaviest_bytes", "redirects_total").foreach { c =>
+          assert(m.getAs[Long](c) === e.getAs[Long](c), s"$ctx $c")
+        }
+        // the exact origin count is what HLL++ estimated at this size
+        assert(m.getAs[Long]("unique_origins") === e.getAs[Long]("hll_origins"), ctx)
+        assert(m.getAs[String]("heaviest_url") === heaviest(m.getInt(0)), ctx)
+      }
+    }
+  }
+
+  test("no persisted RDD survives CrawlJob.run") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val root = Files.createTempDirectory("crawl-hygiene").toString
+    CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe, cfg.copy(maxRounds = 2), root)
+    CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe, cfg.copy(maxRounds = 1), root)
+    // RDDs another suite left behind are that suite's concern; the
+    // crawl must add none
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      sc.getPersistentRDDs.values.map(_.toDebugString).mkString("\n"))
   }
 }

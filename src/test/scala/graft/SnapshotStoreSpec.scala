@@ -339,4 +339,95 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(resumed.currentSnapshot === Some(1))
     assert(resumed.readSeen(spark, 1).count() === 2)
   }
+
+  // ---- recorded schemas: reads that start no Spark job ----
+
+  /** Three committed rounds of the crawl's shapes: a flat seen delta,
+    * nested spans and a binary sketch column. */
+  private def crawlShapedStore(): SnapshotStore = {
+    import spark.implicits._
+    val store = freshStore()
+    (0 to 2).foreach { r =>
+      store.write((0 until 4).map(i => (s"https://h/$r/$i", (r * 10 + i).toLong, r))
+        .toDF("url_canon", "url_hash", "round_first_seen"), r, "url_seen_delta")
+      store.write(Seq((s"d$r", Seq(("text", s"t$r", "", 0), ("media", "", s"m$r", 1)), r))
+        .toDF("doc_id", "spans", "round")
+        .selectExpr("doc_id",
+          "transform(spans, s -> named_struct('kind', s._1, 'text', s._2, 'media_ref', s._3, 'offset', s._4)) as spans",
+          "round"), r, "output_spans")
+      store.write(Seq((r, Array[Byte](1, 2, r.toByte))).toDF("bucket", "filter_bytes"), r, "cuckoo")
+      store.commit(r, r)
+    }
+    store
+  }
+
+  test("schema-recorded reads start no Spark job and return the inferred schema") {
+    val store = crawlShapedStore()
+    var reads = Seq.empty[(String, org.apache.spark.sql.DataFrame)]
+    val jobs = jobsStartedBy {
+      reads = Seq(
+        "read url_seen_delta" -> store.read(spark, 2, "url_seen_delta"),
+        "read output_spans" -> store.read(spark, 2, "output_spans"),
+        "read cuckoo" -> store.read(spark, 2, "cuckoo"),
+        "readOrEmpty cuckoo" -> store.readOrEmpty(spark, Some(2), "cuckoo", spark.emptyDataFrame),
+        "readSeen" -> store.readSeen(spark, 2),
+        "readSeen pruned" -> store.readSeen(spark, 2, rounds = Some((1, 2))),
+        "readDeltas output_spans" -> store.readDeltas(spark, 2, "output_spans"))
+      reads.foreach(_._2.schema)
+    }
+    assert(jobs === 0)
+    // the same schema an inferring read returns, nested spans and the
+    // binary filter bytes included
+    def inferred(table: String) = spark.read.parquet(store.tablePath(2, table)).schema
+    reads.foreach { case (name, df) =>
+      val table = Seq("url_seen_delta", "output_spans", "cuckoo")
+        .find(t => name.contains(t)).getOrElse("url_seen_delta")
+      assert(df.schema === inferred(table), name)
+    }
+    assert(store.readSeen(spark, 2).count() === 12)
+    assert(store.readDeltas(spark, 2, "output_spans")
+      .selectExpr("explode(spans) as s").filter("s.kind = 'media'").count() === 3)
+    assert(store.read(spark, 1, "cuckoo").head().getAs[Array[Byte]]("filter_bytes").toSeq ===
+      Seq[Byte](1, 2, 1))
+  }
+
+  test("tables without a recorded schema still read through inference") {
+    val store = crawlShapedStore()
+    // a checkpoint written before schemas were recorded
+    Files.delete(java.nio.file.Paths.get(store.tablePath(1, "url_seen_delta"), "_SCHEMA.json"))
+    assert(store.recordedSchema(1, "url_seen_delta").isEmpty)
+    assert(store.recordedSchema(2, "url_seen_delta").isDefined)
+    var legacy: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { legacy = store.read(spark, 1, "url_seen_delta") } > 0)
+    assert(legacy.schema === store.read(spark, 2, "url_seen_delta").schema)
+    assert(store.readSeen(spark, 2).count() === 12)
+    val spansSchema = store.read(spark, 2, "output_spans").schema
+    // maintenance assembles hidden-partitioned tables by rename: no
+    // recorded schema, inference (with footer merging) reads them
+    store.compactDeltas(spark, 2, "url_seen_delta")
+    store.relocateDeltas(2, "output_spans")
+    assert(store.recordedSchema(2, "url_seen_delta").isEmpty)
+    assert(store.recordedSchema(2, "output_spans").isEmpty)
+    assert(store.readSeen(spark, 2).count() === 12)
+    assert(store.readSeen(spark, 2).columns.toSeq === Seq("url_canon", "url_hash", "round_first_seen"))
+    assert(store.readDeltas(spark, 2, "output_spans").count() === 3)
+    assert(store.readDeltas(spark, 2, "output_spans").schema === spansSchema)
+  }
+
+  test("mixed recorded schemas fold by name (allowMissingColumns) with no Spark job") {
+    import spark.implicits._
+    val store = freshStore()
+    store.write(Seq(("https://a/0", 10L, 0)).toDF("url_canon", "url_hash", "round_first_seen"),
+      0, "url_seen_delta")
+    store.commit(0, 0)
+    store.write(Seq(("https://a/1", 11L, 1, "sitemap"))
+      .toDF("url_canon", "url_hash", "round_first_seen", "source"), 1, "url_seen_delta")
+    store.commit(1, 1)
+    var seen: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { seen = store.readSeen(spark, 1); seen.schema } === 0)
+    assert(seen.columns.toSet === Set("url_canon", "url_hash", "round_first_seen", "source"))
+    assert(seen.select("url_canon", "source").collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toMap ===
+      Map("https://a/0" -> None, "https://a/1" -> Some("sitemap")))
+  }
 }
